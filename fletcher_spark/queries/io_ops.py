@@ -60,7 +60,7 @@ def io_shard_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir)["documents"]
     out = tempfile.mkdtemp(prefix="fletcher_shards_")
     write_training_shards(docs, out, n_shards=8, order_col="doc_id")
-    return _audit(spark.read.parquet(out))
+    return _audit(spark.read.schema(docs.schema).parquet(out))
 
 
 @query("io_compact_roundtrip", oracle=_AUDIT_ORACLE)
@@ -69,9 +69,10 @@ def io_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataset into ~128 MB-target files (metadata-sized, no data read for
     the sizing), read back, audit content equality.  The operational
     small-files fix — at 100 TB this runs per partition directory."""
+    docs = load_tables(spark, sf_dir)["documents"]
     out = tempfile.mkdtemp(prefix="fletcher_compact_")
     compact_parquet(spark, f"{sf_dir}/documents.parquet", out, target_mb=128)
-    return _audit(spark.read.parquet(out))
+    return _audit(spark.read.schema(docs.schema).parquet(out))
 
 
 @query("io_jsonl_roundtrip", oracle=_AUDIT_ORACLE)
@@ -210,8 +211,8 @@ def io_arrow_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow ingest + egress (SURVEY §2.1 rows 3-4, the reference's
     ``pandas_from_arrow`` / ``__arrow_array__`` surface —
     /root/reference/fletcher/base.py:1712-1750): read the parquet file
-    Arrow-side, ingest the ``pa.Table`` (io.py:from_arrow — Spark 4's
-    native Arrow createDataFrame path), egress back to Arrow
+    Arrow-side, ingest the ``pa.Table`` (io.py:from_arrow — record
+    batches shipped to the JVM as an RDD), egress back to Arrow
     (io.py:to_arrow), re-ingest, and return the twice-round-tripped
     frame for the value check.  The egress collect is bounded by the
     dimension table — Arrow egress is a driver-materialization API by

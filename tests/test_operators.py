@@ -122,6 +122,132 @@ def test_arrow_roundtrip(spark):
     assert got[2] == (None, None) or got[2][0] is None
 
 
+_LRT = "spark.sql.execution.arrow.localRelationThreshold"
+
+
+@pytest.mark.parametrize("caller_value", [None, "1234"], ids=["default", "explicit"])
+def test_from_arrow_ships_batches_not_local_relation(spark, caller_value):
+    """Non-empty ingest plans a LogicalRDD (Catalyst never sees the rows)
+    and leaves the caller's localRelationThreshold as it found it."""
+    from fletcher_spark.io import from_arrow
+
+    if caller_value is not None:
+        spark.conf.set(_LRT, caller_value)
+    try:
+        df = from_arrow(spark, pa.table({"k": pa.array([1, 2, 3])}))
+        qe = df._jdf.queryExecution()
+        assert qe.analyzed().getClass().getSimpleName() == "LogicalRDD"
+        assert "LocalTableScan" not in qe.executedPlan().toString()
+        assert spark.conf.get(_LRT, None) == caller_value
+    finally:
+        spark.conf.unset(_LRT)
+
+
+@pytest.mark.parametrize("caller_value", [None, "1234"], ids=["default", "explicit"])
+def test_from_arrow_restores_threshold_when_ingest_raises(spark, caller_value):
+    """A union column fails both the Arrow path (PySparkTypeError) and the
+    pandas bridge; the threshold is restored all the same."""
+    from fletcher_spark.io import from_arrow
+
+    union = pa.UnionArray.from_sparse(
+        pa.array([0, 1], pa.int8()), [pa.array([1, 2]), pa.array(["a", "b"])]
+    )
+    if caller_value is not None:
+        spark.conf.set(_LRT, caller_value)
+    try:
+        with pytest.raises((TypeError, pa.ArrowNotImplementedError)):
+            from_arrow(spark, pa.table({"u": union}))
+        assert spark.conf.get(_LRT, None) == caller_value
+    finally:
+        spark.conf.unset(_LRT)
+
+
+def test_from_arrow_halffloat_widens_to_double(spark):
+    """float16 has no Spark type: the pandas bridge brings it back as
+    double, inside the same threshold scope."""
+    import numpy as np
+
+    from fletcher_spark.io import from_arrow
+
+    table = pa.table({"h": pa.array(np.array([1.5, -2.0], dtype=np.float16))})
+    df = from_arrow(spark, table)
+    assert df.schema["h"].dataType.simpleString() == "double"
+    assert sorted(r.h for r in df.collect()) == [-2.0, 1.5]
+    assert spark.conf.get(_LRT, None) is None
+
+
+def _nulls_table() -> pa.Table:
+    import datetime
+    import decimal
+
+    n = [None, None]
+    return pa.table(
+        {
+            "k": pa.array([0, 1, 2], pa.int64()),
+            "i": pa.array([1, None, 3], pa.int32()),
+            "f": pa.array([None, 2.5, float("nan")], pa.float64()),
+            "s": pa.array(["a", None, ""], pa.string()),
+            "b": pa.array([True, None, False], pa.bool_()),
+            "ts": pa.array(
+                [datetime.datetime(2020, 1, 2, 3, 4, 5, 6), *n], pa.timestamp("us", "UTC")
+            ),
+            "d": pa.array([*n, datetime.date(1999, 12, 31)], pa.date32()),
+            "dec": pa.array([decimal.Decimal("1.25"), *n], pa.decimal128(10, 2)),
+            "bin": pa.array([None, b"\x00\xff", b""], pa.binary()),
+            "l": pa.array([[1.0, None], None, []], pa.list_(pa.float64())),
+            "st": pa.array([{"x": 1, "y": None}, None, {"x": None, "y": "z"}],
+                           pa.struct([("x", pa.int64()), ("y", pa.string())])),
+            "dict": pa.array(["p", None, "p"]).dictionary_encode(),
+        }
+    )
+
+
+def _nan_free(t: pa.Table) -> pa.Table:
+    """NaN compares unequal to itself in ``Table.equals``; swap it for a
+    sentinel so a NaN that survived the round trip compares equal."""
+    import pyarrow.compute as pc
+
+    for i, f in enumerate(t.schema):
+        if pa.types.is_floating(f.type):
+            col = t.column(i)
+            t = t.set_column(i, f, pc.if_else(pc.is_nan(col), -1e300, col))
+    return t
+
+
+@pytest.mark.parametrize(
+    "make",
+    [
+        lambda: _nulls_table().slice(0, 0),
+        lambda: _nulls_table().to_batches()[0],
+        _nulls_table,
+        lambda: pa.table({"k": pa.array(range(50_000), pa.int64()),
+                          "v": pa.array([f"r{i}" for i in range(50_000)])}),
+    ],
+    ids=["empty", "record_batch", "nulls", "50k"],
+)
+def test_from_arrow_parity(spark, make):
+    """to_arrow(from_arrow(t)) gives t back, after Spark's type mapping:
+    dictionary collapses to its value type; everything else here maps
+    to itself.  A multi-batch table becomes one partition per batch."""
+    import math
+
+    from fletcher_spark.io import from_arrow, to_arrow
+
+    data = make()
+    df = from_arrow(spark, data)
+    t = pa.Table.from_batches([data]) if isinstance(data, pa.RecordBatch) else data
+    back = to_arrow(df).sort_by("k")
+    fields = [
+        pa.field(f.name, f.type.value_type if pa.types.is_dictionary(f.type) else f.type)
+        for f in t.schema
+    ]
+    assert back.schema.types == [f.type for f in fields]
+    assert _nan_free(back).equals(_nan_free(t.cast(pa.schema(fields)).cast(back.schema)))
+    if t.num_rows == 50_000:
+        per_batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+        assert df.rdd.getNumPartitions() == math.ceil(t.num_rows / per_batch)
+
+
 def test_type_mapping_roundtrip():
     from fletcher_spark.types import arrow_to_spark_type, spark_to_arrow_type
     from pyspark.sql import types as T
