@@ -48,6 +48,30 @@ RUNTIME_CONFS = {
 }
 
 
+#: Static confs: read once, when the JVM-side SQL state is first built,
+#: so they reach a session only through its builder — ``get_spark`` and
+#: the repository's own builders (``bench.py``, ``tools/``) apply them.
+#: ``apply_runtime_confs`` cannot: a session built elsewhere, by a plain
+#: ``SparkSession.builder``, keeps Spark's defaults for the life of its JVM.
+STATIC_CONFS = {
+    # Whole-stage codegen classes are compiled by Janino once per distinct
+    # generated source and kept in a JVM-wide cache of 100 entries by
+    # default.  The query surface generates more distinct classes than
+    # that (sf0.01, local[4]: columnar workload 118, curation ~160, the
+    # 201 registered queries ~2100; mean bytecode 2.6-3.2 KB per class
+    # file).  At the default the cache thrashes and every warm pass
+    # recompiles the same classes, each of which then starts interpreted
+    # in the JVM: 62-72 compiles per timed columnar pass, 49-75 per
+    # curation pass, ~2425 over a second pass of the 201 queries.  At this
+    # size that pass compiles 78, in queries whose generated source
+    # changes between runs.
+    # 4096 is about 2x the surface and keeps the cache bounded.  The size
+    # follows the code surface, not the data size: compile cost is per
+    # class, and the same classes are generated at any scale.
+    "spark.sql.codegen.cache.maxEntries": "4096",
+}
+
+
 #: SparkSession objects already conf'd — each conf.set is a py4j
 #: roundtrip (~5 ms for the block), and load_tables calls this on EVERY
 #: query invocation; once per session is enough (nothing in this
@@ -95,7 +119,11 @@ def _disable_dataframe_debugging() -> None:
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply deterministic/performance confs that are legal at runtime.
-    Idempotent and memoized per session object — see ``_CONFS_APPLIED``."""
+    Idempotent and memoized per session object — see ``_CONFS_APPLIED``.
+
+    ``STATIC_CONFS`` (the codegen class-cache size) are not among them:
+    they are static, fixed when the session's JVM state is built, and
+    setting them on a running session changes nothing."""
     if spark in _CONFS_APPLIED:
         return spark
     for k, v in RUNTIME_CONFS.items():
@@ -122,7 +150,7 @@ def get_spark(
     if master is None and "SPARK_GRAFT_CPUS" in os.environ:
         master = f"local[{os.environ['SPARK_GRAFT_CPUS']}]"
 
-    builder = SparkSession.builder.appName(app_name)
+    builder = SparkSession.builder.appName(app_name).config(map=STATIC_CONFS)
     if master:
         builder = builder.master(master)
 

@@ -162,18 +162,45 @@ def test_from_arrow_restores_threshold_when_ingest_raises(spark, caller_value):
         spark.conf.unset(_LRT)
 
 
-def test_from_arrow_halffloat_widens_to_double(spark):
-    """float16 has no Spark type: the pandas bridge brings it back as
-    double, inside the same threshold scope."""
+def test_from_arrow_halffloat_widens_to_float_keeping_nulls(spark):
+    """float16 has no Spark type: it is cast to float32 in Arrow, so a
+    null stays null and ingest stays on the record-batch path."""
     import numpy as np
 
-    from fletcher_spark.io import from_arrow
+    from fletcher_spark.io import from_arrow, to_arrow
 
-    table = pa.table({"h": pa.array(np.array([1.5, -2.0], dtype=np.float16))})
-    df = from_arrow(spark, table)
-    assert df.schema["h"].dataType.simpleString() == "double"
-    assert sorted(r.h for r in df.collect()) == [-2.0, 1.5]
+    h = pa.array(np.array([1.5, 0.0], dtype=np.float16), mask=np.array([False, True]))
+    df = from_arrow(spark, pa.table({"k": [0, 1], "h": h}))
+    assert df.schema["h"].dataType.simpleString() == "float"
+    assert df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LogicalRDD"
+    assert to_arrow(df).sort_by("k").column("h").to_pylist() == [1.5, None]
     assert spark.conf.get(_LRT, None) is None
+
+
+def test_read_parquet_with_schema_starts_no_job(spark, tmp_path):
+    """Schema inference reads the footers in a Spark job; a read given
+    its schema constructs without one and reads the same rows."""
+    import pyarrow.parquet as pq
+
+    from fletcher_spark.io import read_parquet
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"k": [1, 2], "s": ["a", None]}), path)
+    sc = spark.sparkContext
+
+    def construct(group, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            df = read_parquet(spark, path, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    inferred, inferred_jobs = construct("read_parquet_inferred")
+    given, given_jobs = construct("read_parquet_given", schema=inferred.schema)
+    assert inferred_jobs >= 1
+    assert given_jobs == 0
+    assert sorted(given.collect()) == sorted(inferred.collect())
 
 
 def _nulls_table() -> pa.Table:

@@ -70,7 +70,7 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from fletcher_spark.session import apply_runtime_confs
+    from fletcher_spark.session import STATIC_CONFS, apply_runtime_confs
     from fletcher_spark.queries import registry
 
     registry.load_all()
@@ -80,6 +80,7 @@ def main() -> None:
     spark = (
         SparkSession.builder.appName("fletcher-spark-profile")
         .master(f"local[{cpus}]")
+        .config(map=STATIC_CONFS)
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.shuffle.partitions", cpus)
         .getOrCreate()

@@ -157,7 +157,7 @@ def run(names: list[str], dst: str = DST) -> None:
     from pyspark.sql import SparkSession
 
     from fletcher_spark.queries import registry
-    from fletcher_spark.session import apply_runtime_confs
+    from fletcher_spark.session import STATIC_CONFS, apply_runtime_confs
 
     registry.load_all()
     label = os.path.basename(dst.rstrip("/"))
@@ -174,6 +174,7 @@ def run(names: list[str], dst: str = DST) -> None:
     spark = (
         SparkSession.builder.appName("scale-probe")
         .master("local[32]")
+        .config(map=STATIC_CONFS)
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.shuffle.partitions", parts)
         # sf1 working sets (15M-row gram/shingle tables + persists) blow
