@@ -23,14 +23,12 @@ from collections.abc import Iterable
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 
 def read_parquet(
     spark: SparkSession,
     path: str,
     columns: Iterable[str] | None = None,
-    schema: StructType | str | None = None,
 ) -> DataFrame:
     """Parquet scan with column projection.
 
@@ -38,14 +36,8 @@ def read_parquet(
     ``ReadSchema`` in ``.explain``); filters applied later are pushed
     down as ``PushedFilters``.  At 100 TB this is the difference between
     reading 2 columns and reading 40.
-
-    Without ``schema`` Spark infers it from the files' footers, which
-    costs one Spark job per call.  A caller that already knows the
-    schema (a ``StructType`` or a DDL string) passes it, and the read
-    starts no job until the result is consumed.
     """
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    df = reader.parquet(path)
+    df = spark.read.parquet(path)
     if columns is not None:
         df = df.select(*columns)
     return df
@@ -377,11 +369,20 @@ class Tables:
     def __init__(self, spark: SparkSession, sf_dir: str):
         self._spark = spark
         self._sf_dir = sf_dir
+        self._raw: dict[str, DataFrame] = {}
         self._cache: dict[str, DataFrame] = {}
+
+    def raw(self, name: str) -> DataFrame:
+        """The table as stored, before :func:`normalize_events`.  Its
+        ``schema`` is the on-disk one; reading it off the memoized handle
+        starts no schema-inference job."""
+        if name not in self._raw:
+            self._raw[name] = self._spark.read.parquet(f"{self._sf_dir}/{name}.parquet")
+        return self._raw[name]
 
     def __getitem__(self, name: str) -> DataFrame:
         if name not in self._cache:
-            df = self._spark.read.parquet(f"{self._sf_dir}/{name}.parquet")
+            df = self.raw(name)
             if name == "events":
                 df = normalize_events(df)
             self._cache[name] = df

@@ -30,7 +30,8 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ns→µs timestamp normalization, same column set."""
     from fletcher_spark.io import load_tables, normalize_events
 
-    load_tables(spark, sf_dir)  # applies runtime confs
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    # load_tables applies the runtime confs; its memoized handle knows
+    # the on-disk schema, so only the first read in a session infers it.
+    schema = load_tables(spark, sf_dir).raw("events").schema
     raw = stream_parquet(spark, sf_dir, schema, glob="events.parquet")
     return normalize_events(raw)

@@ -177,32 +177,6 @@ def test_from_arrow_halffloat_widens_to_float_keeping_nulls(spark):
     assert spark.conf.get(_LRT, None) is None
 
 
-def test_read_parquet_with_schema_starts_no_job(spark, tmp_path):
-    """Schema inference reads the footers in a Spark job; a read given
-    its schema constructs without one and reads the same rows."""
-    import pyarrow.parquet as pq
-
-    from fletcher_spark.io import read_parquet
-
-    path = str(tmp_path / "t.parquet")
-    pq.write_table(pa.table({"k": [1, 2], "s": ["a", None]}), path)
-    sc = spark.sparkContext
-
-    def construct(group, **kw):
-        sc.setJobGroup(group, group)
-        try:
-            df = read_parquet(spark, path, **kw)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return df, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    inferred, inferred_jobs = construct("read_parquet_inferred")
-    given, given_jobs = construct("read_parquet_given", schema=inferred.schema)
-    assert inferred_jobs >= 1
-    assert given_jobs == 0
-    assert sorted(given.collect()) == sorted(inferred.collect())
-
-
 def _nulls_table() -> pa.Table:
     import datetime
     import decimal

@@ -30,6 +30,21 @@ def _rows(df):
     return sorted([tuple(r) for r in df.collect()])
 
 
+def test_stream_events_reads_schema_from_memo(spark):
+    """The stream's schema comes off the ``load_tables`` handle: once the
+    batch events table is loaded, building the stream starts no job."""
+    batch = load_tables(spark, SF_DIR)["events"]
+    sc = spark.sparkContext
+    sc.setJobGroup("stream_events_build", "stream_events_build")
+    try:
+        ev = stream_events(spark, SF_DIR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("stream_events_build") == []
+    assert ev.isStreaming
+    assert ev.schema == batch.schema
+
+
 @pytest.mark.parametrize(
     "name,fn",
     [
