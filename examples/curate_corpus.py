@@ -82,7 +82,7 @@ def main() -> None:
     # exact/substring-dedup sub-DAG (ADVICE r12)
     nk = deduped.agg(F.count(F.lit(1)).alias("__n"))
     banded = sig.crossJoin(F.broadcast(nk)).select(
-        "doc_id", D.lsh_band_keys_adaptive(F.col("sig"), F.col("__n")).alias("band_keys")
+        "doc_id", F.expr(D.lsh_band_keys_adaptive_sql("sig", "__n")).alias("band_keys")
     )
     pairs = D.candidate_pairs(banded, "doc_id")
     dupes = (

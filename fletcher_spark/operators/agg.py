@@ -148,7 +148,7 @@ REDUCTIONS = {
 def _sql_double(x) -> str:
     """A Python float as an EXACT Spark SQL double literal —
     ``float.__repr__`` round-trips doubles bit-exactly (the
-    operators/kmeans.py:centroid_literal discipline); non-finite and
+    operators/kmeans.py:centroid_literal_sql discipline); non-finite and
     NULL spelled via CAST."""
     import math
 

@@ -25,9 +25,11 @@ the whole history per round).  Each round is:
   in-group repack.  The only shuffle per round is this k×dim-keyed
   aggregation of partial sums.
 
-Distance math is the same double-cast ``zip_with``/``aggregate`` folds
-as pipeline/similarity.py — engine-portable, so the whole trainer is
-value-checkable against a SQL oracle.
+Distance math is the same ``zip_with``/``aggregate`` fold shape as
+pipeline/similarity.py, written once as SQL text (:func:`l2sq_sql`,
+:func:`centroid_literal_sql`, :func:`nearest_struct_sql`) and parsed in
+one call — engine-portable, so the whole trainer is value-checkable
+against a SQL oracle.
 """
 
 from __future__ import annotations
@@ -40,20 +42,12 @@ from pyspark.sql import functions as F
 Centroids = list[tuple[int, list[float]]]
 
 
-def l2sq(a: Column, b: Column) -> Column:
-    """Squared euclidean distance: aggregate(zip_with(a,b,(x-y)²), 0, +)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, z: acc + z,
-    )
-
-
 def l2sq_sql(a_sql: str, b_sql: str) -> str:
-    """:func:`l2sq` as SQL text — the same expression tree via ONE
-    parser call instead of the py4j round-trip cascade each HOF lambda
-    costs (~0.1 s per :func:`l2sq` measured r13; ``0.0D`` is the same
-    double-typed zero as ``F.lit(0.0)``)."""
+    """Squared euclidean distance: aggregate(zip_with(a,b,(x-y)²), 0.0D, +).
+
+    SQL text through ONE parser call: the Column-API form paid a py4j
+    round-trip cascade per HOF lambda (~0.1 s per distance, measured
+    r13).  ``0.0D`` keeps the fold double-typed."""
     return (
         "aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)), "
         "0.0D, (acc, z) -> acc + z)"
@@ -61,10 +55,17 @@ def l2sq_sql(a_sql: str, b_sql: str) -> str:
 
 
 def centroid_literal_sql(cent: Centroids) -> str:
-    """The centroid model as SQL literal text (see
-    :func:`centroid_literal` for why parsed text beats per-element
-    ``F.lit``; ``float.__repr__`` round-trips doubles exactly and the
-    ``D`` suffix keeps every literal double-typed, never decimal)."""
+    """Centroids as one array<struct<cid,cv>> literal text — the same
+    plan-cost-aware trick as the LSH plane matrix
+    (pipeline/similarity.py): one parsed literal, broadcast with the
+    serialized plan, no join needed to reach it.
+
+    Parsed text, not per-element ``F.lit``: that form cost a py4j
+    round-trip per centroid element (k×dim ≈ 650 calls ≈ 0.3 s of
+    driver time), and every Lloyd round rebuilds this literal — the
+    construction cost multiplied by iters (measured r13).
+    ``float.__repr__`` round-trips doubles exactly and the ``D`` suffix
+    keeps every literal double-typed, never decimal."""
     return "array({})".format(
         ",".join(
             "named_struct('cid', {}L, 'cv', array({}))".format(
@@ -94,21 +95,6 @@ def nearest_struct_sql(vec_sql: str, cent: Centroids) -> str:
     parsed in ONE call.  Struct comparison orders by d2 then cid, so
     ties still break on the lowest cid."""
     return nearest_struct_over_sql(vec_sql, centroid_literal_sql(cent))
-
-
-def centroid_literal(cent: Centroids) -> Column:
-    """Centroids as one array<struct<cid,cv>> literal — the same
-    plan-cost-aware trick as the LSH plane matrix
-    (pipeline/similarity.py): one parsed literal, broadcast with the
-    serialized plan, no join needed to reach it.
-
-    Built as ONE parsed SQL string: the per-element ``F.lit`` form cost
-    a py4j round-trip per centroid element (k×dim ≈ 650 calls ≈ 0.3 s
-    of driver time), and every Lloyd round rebuilds this literal — the
-    construction cost multiplied by iters (measured r13; the parsed
-    literal is value-identical, ``float.__repr__`` round-trips doubles
-    exactly)."""
-    return F.expr(centroid_literal_sql(cent))
 
 
 def assign_nearest(

@@ -31,16 +31,13 @@ __all__ = [
     "word_shingles",
     "shingle_frame",
     "minhash_signature",
-    "lsh_band_keys",
     "lsh_band_keys_sql",
-    "lsh_band_keys_adaptive",
     "lsh_band_keys_adaptive_sql",
     "lsh_rpb_case_sql",
     "candidate_pairs",
     "verify_jaccard",
     "simhash64",
     "simhash_chunks",
-    "simhash_chunks_packed",
     "simhash_chunks_packed_sql",
     "simhash_chunks_packed_128_sql",
 ]
@@ -132,7 +129,7 @@ def minhash_signature(shingles: Column, n_hashes: int = 12) -> Column:
     )
 
 
-def lsh_band_keys(sig: Column, bands: int = 4, rows: int = 3) -> Column:
+def lsh_band_keys_sql(sig_sql: str, bands: int = 4, rows: int = 3) -> str:
     """Banded LSH keys: split the signature into ``bands`` groups of
     ``rows`` and hash each group — array of ``(band int, key string)``
     structs where key = md5 of the band's '|'-joined rows.
@@ -140,32 +137,11 @@ def lsh_band_keys(sig: Column, bands: int = 4, rows: int = 3) -> Column:
     Two docs are candidates iff they share a key in ≥1 band:
     P[candidate] = 1 - (1 - J^rows)^bands — the (4,3) default passes
     J≥0.8 with p>0.93 and rejects J≤0.3 with p>0.89.
-    """
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.element_at(sig, b * rows + r + 1).cast("string")
-                            for r in range(rows)
-                        ],
-                    )
-                ).alias("key"),
-            )
-            for b in range(bands)
-        ]
-    )
 
-
-def lsh_band_keys_sql(sig_sql: str, bands: int = 4, rows: int = 3) -> str:
-    """:func:`lsh_band_keys` as SQL text — the same (band, key) struct
-    array via ONE parser call (the Column form costs a py4j round-trip
-    per node: ~0.25 s per construction for the adaptive three-rung
-    CASE, measured r13).  Differentially pinned value-identical in
-    tests/test_vector_sql_twins.py."""
+    SQL text through ONE parser call: the Column-API form cost a py4j
+    round-trip per node (~0.25 s per construction for the adaptive
+    three-rung CASE, measured r13).  Values pinned against plain Python
+    in tests/test_vector_sql_twins.py."""
     return "array({})".format(
         ",".join(
             "named_struct('band', {b}, 'key', md5(concat_ws('|', {cols})))".format(
@@ -181,8 +157,12 @@ def lsh_band_keys_sql(sig_sql: str, bands: int = 4, rows: int = 3) -> str:
 
 
 def lsh_band_keys_adaptive_sql(sig_sql: str, n_sql: str) -> str:
-    """:func:`lsh_band_keys_adaptive` as SQL text — the same
-    ladder-threshold CASE over the same branch expressions."""
+    """Corpus-size-adaptive band layout (VERDICT r11 ask #2): pick
+    (bands, rows) from ``LSH_BAND_LADDER`` by integer thresholds on
+    ``n_sql`` (a broadcast one-row count, constant across rows).  CASE
+    evaluates lazily, so each row computes only the chosen layout's
+    band md5s; all branches share the already-computed 12-wide ``sig``.
+    """
     whens = " ".join(
         f"WHEN {n_sql} <= {max_n} THEN {lsh_band_keys_sql(sig_sql, bands, rows)}"
         for max_n, bands, rows in LSH_BAND_LADDER
@@ -234,25 +214,6 @@ for _entry in LSH_BAND_LADDER + ((0, *LSH_BAND_FLOOR),):
         f"LSH band rung {_bands}x{_rows}: oracle unnest([0,1,2,3]) caps bands at 4"
     )
 del _entry, _bands, _rows
-
-
-def lsh_band_keys_adaptive(sig: Column, n_docs: Column) -> Column:
-    """Corpus-size-adaptive band layout (VERDICT r11 ask #2): pick
-    (bands, rows) from ``LSH_BAND_LADDER`` by integer thresholds on
-    ``n_docs`` (a broadcast one-row count, constant across rows).  CASE
-    evaluates lazily, so each row computes only the chosen layout's
-    band md5s; all branches share the already-computed 12-wide ``sig``.
-    """
-    expr: Column | None = None
-    for max_n, bands, rows in LSH_BAND_LADDER:
-        branch = lsh_band_keys(sig, bands, rows)
-        expr = (
-            F.when(n_docs <= max_n, branch)
-            if expr is None
-            else expr.when(n_docs <= max_n, branch)
-        )
-    assert expr is not None
-    return expr.otherwise(lsh_band_keys(sig, *LSH_BAND_FLOOR))
 
 
 def lsh_rpb_case_sql(n_expr: str) -> str:
@@ -421,34 +382,6 @@ def simhash_df_128(
         " + ".join(f"shiftleft(if({bit(i)}, 1L, 0L), {127 - i})" for i in range(64, 128))
     )
     return summed.select(id_col, sig1.alias("sig1"), sig2.alias("sig2"))
-
-
-def simhash_chunks_packed_128(
-    sig1: Column, sig2: Column, n_chunks: int = 8
-) -> Column:
-    """:func:`simhash_chunks_packed` over the two-word 128-bit
-    signature: ``n_chunks`` equal chunks of ``128 / n_chunks`` bits,
-    chunk k sliced out of sig1 (k < n_chunks/2) or sig2 with two
-    integer ops.  Pigeonhole: Hamming ≤ n_chunks − 1 ⇒ ≥1 shared
-    chunk; beyond that the bucket join is probabilistic (the planted
-    near-dup recall is pinned in tests/test_pipeline.py)."""
-    w = 128 // n_chunks
-    assert 64 % w == 0, "chunk width must divide the 64-bit words"
-    per_word = 64 // w
-    mask = (1 << w) - 1
-    out = []
-    for k in range(n_chunks):
-        word = sig1 if k < per_word else sig2
-        kk = k % per_word
-        out.append(
-            F.struct(
-                F.lit(k).alias("band"),
-                F.shiftright(word, 64 - (kk + 1) * w)
-                .bitwiseAND(F.lit(mask))
-                .alias("key"),
-            )
-        )
-    return F.array(*out)
 
 
 def candidate_pairs(
@@ -625,30 +558,15 @@ def simhash_chunks(bits: Column, n_chunks: int = 8) -> Column:
     )
 
 
-def simhash_chunks_packed(sig: Column, n_chunks: int = 8) -> Column:
+def simhash_chunks_packed_sql(sig_sql: str, n_chunks: int = 8) -> str:
     """:func:`simhash_chunks` over the packed 64-bit signature: chunk k
     is the integer ``(sig >>> (64 - (k+1)·w)) & (2^w − 1)`` — the same
     bucket partition as the bit-string keys (identical index ranges,
     bijective key mapping), but built from two integer ops instead of an
     array slice + string join.  The ``& mask`` makes the arithmetic
-    shift's sign-fill irrelevant."""
-    w = 64 // n_chunks
-    mask = (1 << w) - 1
-    return F.array(
-        *[
-            F.struct(
-                F.lit(k).alias("band"),
-                F.shiftright(sig, 64 - (k + 1) * w).bitwiseAND(F.lit(mask)).alias("key"),
-            )
-            for k in range(n_chunks)
-        ]
-    )
-
-
-def simhash_chunks_packed_sql(sig_sql: str, n_chunks: int = 8) -> str:
-    """:func:`simhash_chunks_packed` as SQL text — same (band, key)
-    structs via ONE parser call (r13 wave 10 discipline; differential
-    pin in tests/test_vector_sql_twins.py)."""
+    shift's sign-fill irrelevant.  SQL text through ONE parser call
+    (r13 wave 10); values pinned against plain Python in
+    tests/test_vector_sql_twins.py."""
     w = 64 // n_chunks
     mask = (1 << w) - 1
     return "array({})".format(
@@ -663,8 +581,12 @@ def simhash_chunks_packed_sql(sig_sql: str, n_chunks: int = 8) -> str:
 def simhash_chunks_packed_128_sql(
     sig1_sql: str, sig2_sql: str, n_chunks: int = 8
 ) -> str:
-    """:func:`simhash_chunks_packed_128` as SQL text — see
-    :func:`simhash_chunks_packed_sql`."""
+    """:func:`simhash_chunks_packed_sql` over the two-word 128-bit
+    signature: ``n_chunks`` equal chunks of ``128 / n_chunks`` bits,
+    chunk k sliced out of sig1 (k < n_chunks/2) or sig2 with two
+    integer ops.  Pigeonhole: Hamming ≤ n_chunks − 1 ⇒ ≥1 shared
+    chunk; beyond that the bucket join is probabilistic (the planted
+    near-dup recall is pinned in tests/test_pipeline.py)."""
     w = 128 // n_chunks
     assert 64 % w == 0, "chunk width must divide the 64-bit words"
     per_word = 64 // w

@@ -27,11 +27,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
-    "dot",
-    "cosine",
-    "l2_norm",
+    "d_sql",
+    "dot_sql",
+    "l2_norm_sql",
+    "cosine_sql",
     "hyperplane_signs",
-    "lsh_bucket",
+    "lsh_bucket_sql",
+    "lsh_table_keys_sql",
+    "expr_cached",
     "brute_force_topk",
     "bits_case_sql",
 ]
@@ -58,46 +61,20 @@ def bits_case_sql(n_expr: str, target: int, min_bits: int, max_bits: int) -> str
     return f"(CASE {whens} ELSE {max_bits} END)"
 
 
-def _d(col: Column) -> Column:
-    """Elementwise cast to double — the parity contract (float32 math
-    differs between engines; double math on float32 inputs does not)."""
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Left-fold dot product: aggregate(zip_with(a,b,*), 0.0, +)."""
-    return F.aggregate(
-        F.zip_with(_d(a), _d(b), lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-# --- SQL-text twins of the vector folds (r13, guide §7.3) ------------
-#
-# Every HOF lambda built through the Column API costs a py4j round-trip
-# cascade (~25-70 ms each, measured r13), and the embedding queries
-# build a handful per construction.  These twins render the SAME
-# expression tree as SQL text parsed in ONE call; ``0.0D`` is the same
-# double-typed zero as ``F.lit(0.0)``, and the CASE form is what
-# ``F.when(..).otherwise(..)`` compiles to.  Results are node-for-node
-# identical to the Column forms (differential pins in
-# tests/test_vector_sql_twins.py).
+# Vector folds as SQL text, parsed in ONE call: through the Column API
+# every HOF lambda costs a py4j round-trip cascade (~25-70 ms each,
+# measured r13).  Values pinned in tests/test_vector_sql_twins.py.
 
 
 def d_sql(a_sql: str) -> str:
-    """:func:`_d` as SQL text."""
+    """Elementwise cast to double — the parity contract (float32 math
+    differs between engines; double math on float32 inputs does not)."""
     return f"transform({a_sql}, x -> CAST(x AS DOUBLE))"
 
 
 def dot_sql(a_sql: str, b_sql: str) -> str:
-    """:func:`dot` as SQL text (the ``_d`` double-cast included)."""
+    """Left-fold dot product over the :func:`d_sql` double casts:
+    aggregate(zip_with(a, b, *), 0.0D, +)."""
     return (
         "aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
         "0.0D, (acc, v) -> acc + v)"
@@ -105,12 +82,12 @@ def dot_sql(a_sql: str, b_sql: str) -> str:
 
 
 def l2_norm_sql(a_sql: str) -> str:
-    """:func:`l2_norm` as SQL text."""
+    """Euclidean norm: sqrt of the self dot product."""
     return f"sqrt({dot_sql(a_sql, a_sql)})"
 
 
 def cosine_sql(a_sql: str, b_sql: str) -> str:
-    """:func:`cosine` as SQL text."""
+    """Cosine similarity: dot / (|a|·|b|)."""
     return "({d}) / (({na}) * ({nb}))".format(
         d=dot_sql(a_sql, b_sql), na=l2_norm_sql(a_sql), nb=l2_norm_sql(b_sql)
     )
@@ -130,28 +107,6 @@ def hyperplane_signs(n_planes: int, dim: int, seed: str = "ann") -> list[list[in
     return mat
 
 
-def lsh_bucket(vec: Column, planes: list[list[int]]) -> Column:
-    """Sign-LSH bucket id: one char per hyperplane ('1' if dot ≥ 0),
-    concatenated to an n_planes-bit string key.
-
-    The plane matrix enters the plan as ONE parsed 2-level literal
-    walked by a ``transform`` — the same two plan-cost rules
-    :func:`lsh_table_keys` documents: per-element ``F.lit`` py4j
-    round-trips cost ~0.5 ms each (8×64 planes ≈ 0.3 s of driver time
-    per query construction, measured r13), and expanding each plane
-    into its own aggregate sub-tree makes Catalyst analysis
-    super-linear in plane count.  Emitted bits, and therefore keys,
-    are byte-identical to the unrolled form."""
-    planes_lit = _planes_2d_lit(tuple(tuple(row) for row in planes))
-    return F.array_join(
-        F.transform(
-            planes_lit,
-            lambda row: F.when(dot(vec, row) >= 0, F.lit("1")).otherwise(F.lit("0")),
-        ),
-        "",
-    )
-
-
 @lru_cache(maxsize=32)
 def _planes_2d_sql(planes: tuple[tuple[int, ...], ...]) -> str:
     """SQL text of the 2-level plane-matrix literal, memoized per
@@ -165,20 +120,18 @@ def _planes_2d_sql(planes: tuple[tuple[int, ...], ...]) -> str:
     )
 
 
-@lru_cache(maxsize=32)
-def _planes_2d_lit(planes: tuple[tuple[int, ...], ...]) -> Column:
-    """Parsed 2-level plane-matrix literal, memoized per process: the
-    plane matrices are module constants, parsing+building the literal
-    Column costs real driver time per query construction, and an
-    unresolved Column is immutable and session-independent — pure plan
-    metadata reuse (r13)."""
-    return F.expr(_planes_2d_sql(planes))
-
-
 def lsh_bucket_sql(vec_sql: str, planes: list[list[int]]) -> str:
-    """:func:`lsh_bucket` as SQL text — same emitted bits and keys,
-    with the whole per-plane fold going through the parser in ONE call
-    instead of a py4j lambda cascade (r13, guide §7.3)."""
+    """Sign-LSH bucket id: one char per hyperplane ('1' if dot ≥ 0),
+    concatenated to an n_planes-bit string key.
+
+    The plane matrix enters the plan as ONE parsed 2-level literal
+    walked by a ``transform`` — the same two plan-cost rules
+    :func:`lsh_table_keys_sql` documents: per-element ``F.lit`` py4j
+    round-trips cost ~0.5 ms each (8×64 planes ≈ 0.3 s of driver time
+    per query construction, measured r13), and expanding each plane
+    into its own aggregate sub-tree makes Catalyst analysis
+    super-linear in plane count.  The whole per-plane fold goes
+    through the parser in ONE call (r13, guide §7.3)."""
     planes_sql = _planes_2d_sql(tuple(tuple(row) for row in planes))
     return (
         "array_join(transform({lit}, row -> "
@@ -210,19 +163,9 @@ def _planes_3d_sql(
     )
 
 
-@lru_cache(maxsize=32)
-def _planes_3d_lit(
-    planes: tuple[tuple[int, ...], ...], planes_per_table: int
-) -> Column:
-    """Parsed 3-level (table-grouped) plane literal, memoized per
-    process — see :func:`_planes_2d_lit`."""
-    return F.expr(_planes_3d_sql(planes, planes_per_table))
-
-
 @lru_cache(maxsize=128)
 def expr_cached(sql: str) -> Column:
-    """``F.expr`` memoized per process on the SQL text (r14) — the
-    general form of :func:`_planes_2d_lit`/:func:`_planes_3d_lit`.
+    """``F.expr`` memoized per process on the SQL text (r14).
 
     Parsing a plane-matrix fold (4k double literals) costs ~0.1 s of
     driver time PER QUERY CONSTRUCTION, and every bench/driver run
@@ -238,21 +181,6 @@ def expr_cached(sql: str) -> Column:
 def lsh_table_keys_sql(
     vec_sql: str, planes: list[list[int]], planes_per_table: int = 4
 ) -> str:
-    """:func:`lsh_table_keys` as SQL text — the nested per-table /
-    per-plane fold parsed in ONE call; same (band, key) structs
-    (r13, guide §7.3)."""
-    tables_sql = _planes_3d_sql(
-        tuple(tuple(row) for row in planes), planes_per_table
-    )
-    return (
-        "transform({lit}, (tbl, t) -> named_struct("
-        "'band', CAST(t AS INT), "
-        "'key', array_join(transform(tbl, row -> "
-        "CASE WHEN ({d}) >= 0 THEN '1' ELSE '0' END), '')))"
-    ).format(lit=tables_sql, d=dot_sql(vec_sql, "row"))
-
-
-def lsh_table_keys(vec: Column, planes: list[list[int]], planes_per_table: int = 4) -> Column:
     """Multi-table sign-LSH: group the hyperplanes into L tables of
     ``planes_per_table`` and emit an array of ``(band, key)`` structs —
     two vectors are candidates iff they share a key in ANY table.
@@ -267,27 +195,22 @@ def lsh_table_keys(vec: Column, planes: list[list[int]], planes_per_table: int =
     own aggregate sub-tree instead makes Catalyst analysis + codegen
     super-linear in plane count (measured ~9 s of one-time plan cost at
     64 planes vs ~0.1 s for this form; per-row math is identical).
-    The literal itself is built as ONE parsed SQL string, not nested
-    ``F.lit`` calls: 64×64 planes is 4096 elements, and a py4j
-    round-trip per element costs ~2.4 s of driver time before the
-    query even exists (measured; the parse path is ~0.1 s).
+    The literal itself is parsed SQL text, not nested ``F.lit`` calls:
+    64×64 planes is 4096 elements, and a py4j round-trip per element
+    costs ~2.4 s of driver time before the query even exists
+    (measured; the parse path is ~0.1 s).  The nested per-table /
+    per-plane fold goes through the parser in the same ONE call
+    (r13, guide §7.3).
     """
-    tables_lit = _planes_3d_lit(
+    tables_sql = _planes_3d_sql(
         tuple(tuple(row) for row in planes), planes_per_table
     )
-    return F.transform(
-        tables_lit,
-        lambda tbl, t: F.struct(
-            t.cast("int").alias("band"),
-            F.array_join(
-                F.transform(
-                    tbl,
-                    lambda row: F.when(dot(vec, row) >= 0, F.lit("1")).otherwise(F.lit("0")),
-                ),
-                "",
-            ).alias("key"),
-        ),
-    )
+    return (
+        "transform({lit}, (tbl, t) -> named_struct("
+        "'band', CAST(t AS INT), "
+        "'key', array_join(transform(tbl, row -> "
+        "CASE WHEN ({d}) >= 0 THEN '1' ELSE '0' END), '')))"
+    ).format(lit=tables_sql, d=dot_sql(vec_sql, "row"))
 
 
 def brute_force_topk(
@@ -310,20 +233,21 @@ def brute_force_topk(
     # norms once per vector (array folds are interpreted — folding a·a
     # and b·b per PAIR would triple the hot-loop cost); cosine per pair
     # is then a single dot + one division
+    norm = F.expr(l2_norm_sql(f"`{vec_col}`"))
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
-        l2_norm(F.col(vec_col)).alias("qnorm"),
+        norm.alias("qnorm"),
     )
     v = vectors.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("nvec"),
-        l2_norm(F.col(vec_col)).alias("nnorm"),
+        norm.alias("nnorm"),
     )
     scored = (
         v.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos", dot(F.col("qvec"), F.col("nvec")) / (F.col("qnorm") * F.col("nnorm")))
+        .withColumn("cos", F.expr(f"({dot_sql('qvec', 'nvec')}) / (qnorm * nnorm)"))
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
     return (

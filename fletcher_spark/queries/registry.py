@@ -87,9 +87,9 @@ CHANGED_ROUND: dict[str, int] = {
     "events_session_window": 13,
     # r13 optimization round, operator-module rewrites invisible to the
     # source-hash guard — output values identical in every case, plan/
-    # construction shape changed: kmeans.centroid_literal and
-    # similarity.lsh_bucket now build their literals as ONE parsed SQL
-    # expression (was a py4j call per element); graph.kcore_peel no
+    # construction shape changed: the k-means centroid literal and the
+    # sign-LSH plane literal are now built as ONE parsed SQL expression
+    # (was a py4j call per element); graph.kcore_peel no
     # longer checkpoints `survivors` (derived from n0 minus the peeled
     # sets instead)
     "ann_kmeans_train": 14,
@@ -139,6 +139,10 @@ CHANGED_ROUND: dict[str, int] = {
     #   distributed fall-through; pipeline/similarity.expr_cached parse
     #   memo on the plane folds — the cuts-family and knn entries above
     #   are bumped to 14 in place
+    # r15: similarity.brute_force_topk builds its norms and cosine from
+    # the SQL-text folds (l2_norm_sql/dot_sql) now that the Column-API
+    # forms are gone — same optimized plan up to lambda variable names
+    "ann_cosine_topk": 15,
 }
 
 

@@ -79,7 +79,7 @@ def band_index_table(spark, tmp_path_factory):
     sh = D.shingle_frame(d, "text", 3)
     sig = D.minhash_signature_df(sh, "doc_id", "shingles", 12)
     banded = sig.select(
-        "doc_id", F.explode(D.lsh_band_keys(F.col("sig"), 4, 3)).alias("bk")
+        "doc_id", F.explode(F.expr(D.lsh_band_keys_sql("sig", 4, 3))).alias("bk")
     ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
     corpus = banded.filter(F.col("doc_id") % 10 != 0)
 
@@ -160,7 +160,7 @@ def test_band_index_rebuild_rebands_from_stored_signatures(spark, tmp_path):
     # rebuild: stored signatures -> next rung, no document access
     stored = spark.read.parquet(sig_path)
     rebuilt = stored.select(
-        "doc_id", F.explode(D.lsh_band_keys(F.col("sig"), 3, 4)).alias("bk")
+        "doc_id", F.explode(F.expr(D.lsh_band_keys_sql("sig", 3, 4))).alias("bk")
     ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
     plan = rebuilt._jdf.queryExecution().executedPlan().toString()
     # exactly ONE scan, of the signature store (the plan renderer
@@ -175,7 +175,7 @@ def test_band_index_rebuild_rebands_from_stored_signatures(spark, tmp_path):
     # parity: identical band table to banding built from the corpus
     scratch = (
         D.minhash_signature_df(D.shingle_frame(d, "text", 3), "doc_id", "shingles", 12)
-        .select("doc_id", F.explode(D.lsh_band_keys(F.col("sig"), 3, 4)).alias("bk"))
+        .select("doc_id", F.explode(F.expr(D.lsh_band_keys_sql("sig", 3, 4))).alias("bk"))
         .select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
     )
     assert sorted(map(tuple, rebuilt.collect())) == sorted(map(tuple, scratch.collect()))

@@ -84,8 +84,8 @@ def test_simhash_chunk_pigeonhole(spark):
             f ^= 1 << pos
         rows.append((trial, signed(u), signed(f)))
     df = spark.createDataFrame(rows, "trial long, a long, b long")
-    ka = D.simhash_chunks_packed(F.col("a"), 8)
-    kb = D.simhash_chunks_packed(F.col("b"), 8)
+    ka = F.expr(D.simhash_chunks_packed_sql("a", 8))
+    kb = F.expr(D.simhash_chunks_packed_sql("b", 8))
     shared = df.select(
         "trial",
         F.size(
@@ -206,7 +206,7 @@ def test_simhash64_matches_simhash_df_bits(spark, rng):
 
 def test_simhash_chunk_string_and_packed_keys_are_bijective(spark, rng):
     """simhash_chunks (exported bit-string-key form) vs
-    simhash_chunks_packed (the integer-key form the query uses): same
+    simhash_chunks_packed_sql (the integer-key form the query uses): same
     bucket partition under the documented bijection — parsing each
     bit-string key as base-2 must yield exactly the packed integer key
     for the same (doc, band), across random signatures including the
@@ -220,7 +220,7 @@ def test_simhash_chunk_string_and_packed_keys_are_bijective(spark, rng):
     df = spark.createDataFrame(rows, "doc_id long, sig long, bv array<long>")
     packed = {
         (r["doc_id"], e["band"]): e["key"]
-        for r in df.select("doc_id", D.simhash_chunks_packed(F.col("sig"), 8).alias("c")).collect()
+        for r in df.select("doc_id", F.expr(D.simhash_chunks_packed_sql("sig", 8)).alias("c")).collect()
         for e in r["c"]
     }
     strkeys = {
@@ -235,8 +235,8 @@ def test_adaptive_band_rungs_match_explicit_layouts(spark, rng):
     """Every LSH_BAND_LADDER rung — including the 3×4 middle and the
     2×6 floor that no driver scale (nor .tmp/sf10's 500k docs, for the
     floor) ever reaches — is wired correctly: forcing the corpus-count
-    input of ``lsh_band_keys_adaptive`` to a value in each rung's range
-    must reproduce ``lsh_band_keys(sig, bands, rows)`` exactly, and
+    input of ``lsh_band_keys_adaptive_sql`` to a value in each rung's
+    range must reproduce ``lsh_band_keys_sql(sig, bands, rows)`` exactly, and
     ``lsh_rpb_case_sql`` must resolve to the same rows-per-band in
     DuckDB under the same forced count.  This pins the CASE arithmetic
     of the never-exercised branches at unit-test cost; the REAL 3×4
@@ -254,10 +254,10 @@ def test_adaptive_band_rungs_match_explicit_layouts(spark, rng):
         prev_max = max_n
         got = df.select(
             "doc_id",
-            D.lsh_band_keys_adaptive(F.col("sig"), F.lit(forced_n)).alias("bk"),
+            F.expr(D.lsh_band_keys_adaptive_sql("sig", str(forced_n))).alias("bk"),
         )
         want = df.select(
-            "doc_id", D.lsh_band_keys(F.col("sig"), bands, rpb).alias("bk")
+            "doc_id", F.expr(D.lsh_band_keys_sql("sig", bands, rpb)).alias("bk")
         )
         assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0, (
             f"adaptive rung n={forced_n} != explicit {bands}x{rpb}"

@@ -182,10 +182,10 @@ for sf in ("/root/testdata/sf0.1", %r):
     n = d.agg(F.count(F.lit(1)).alias("__n"))
     sh = D.shingle_frame(d, "text", 3).persist()
     sig = D.minhash_signature_df(sh, "doc_id", "shingles", 12).persist()
-    banded = sig.select("doc_id", D.lsh_band_keys(F.col("sig"), 4, 3).alias("band_keys"))
+    banded = sig.select("doc_id", F.expr(D.lsh_band_keys_sql("sig", 4, 3)).alias("band_keys"))
     print("NCAND", sf, D.candidate_pairs(banded, "doc_id").count())
     adaptive = sig.crossJoin(F.broadcast(n)).select(
-        "doc_id", D.lsh_band_keys_adaptive(F.col("sig"), F.col("__n")).alias("band_keys"))
+        "doc_id", F.expr(D.lsh_band_keys_adaptive_sql("sig", "__n")).alias("band_keys"))
     print("NADPT", sf, D.candidate_pairs(adaptive, "doc_id").count())
     sig.unpersist(); sh.unpersist()
 spark.stop()
