@@ -2,16 +2,13 @@
 
 ``entry(spark)`` runs the flagship query (TPC-H Q1 shape) on sf0.001.
 ``queries()`` / ``oracle_sql()`` expose every implemented operator from
-SURVEY.md §2 with its DuckDB-equivalent SQL; the registry in
-``fletcher_spark.queries`` keeps the two in sync.
+SURVEY.md §2 with its DuckDB-equivalent SQL, both in the registration
+order of ``fletcher_spark.queries.registry``, which keeps the two in
+sync.
 """
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,72 +21,6 @@ def _registry():
     return registry
 
 
-def _last_verified_round() -> dict[str, int]:
-    """Round in which each query last got a fully-green driver row.
-
-    Read from the CORRECTNESS_r*.json files the driver leaves in the repo
-    root.  Used to rotate the registry ordering below.
-    """
-    here = os.path.dirname(os.path.abspath(__file__))
-    verified: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if not isinstance(rows, dict):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            green = (
-                row.get("rows_match") is True
-                and row.get("schema_match") is not False
-                and row.get("hash_match") is not False
-                and row.get("err") is None
-            )
-            if green:
-                verified[name] = max(verified.get(name, 0), rnd)
-    return verified
-
-
-def _ordered_names(reg) -> list[str]:
-    """Registry names, least-recently-driver-verified first.
-
-    The driver's per-round correctness snapshot covers a bounded prefix of
-    ``queries()`` (r2 recorded exactly the first 50 of 107).  Three tiers:
-
-    1. never-driver-verified queries (oldest registration first);
-    2. queries whose implementation changed *after* their last green
-       stamp (``registry.CHANGED_ROUND[name] > verified[name]``) —
-       oldest stamp first — so a rewrite re-earns an official stamp in
-       the very next window instead of waiting out the full rotation;
-    3. everything else, oldest stamp first.
-
-    Pure reordering: the set of queries and their oracles are unchanged.
-    """
-    verified = _last_verified_round()
-    introduced = getattr(reg, "INTRODUCED_ROUND", {})
-    # merged manual + mechanical (source-hash snapshot) change-rounds
-    changed_fn = getattr(reg, "changed_rounds", None)
-    changed = changed_fn() if callable(changed_fn) else getattr(reg, "CHANGED_ROUND", {})
-    names = list(reg.QUERIES)
-    order = {n: i for i, n in enumerate(names)}
-
-    def key(n: str):
-        v = verified.get(n, -1)
-        stale = v >= 0 and changed.get(n, 0) > v
-        tier = 0 if v < 0 else (1 if stale else 2)
-        return (tier, v, introduced.get(n, 2), order[n])
-
-    return sorted(names, key=key)
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     reg = _registry()
@@ -98,11 +29,9 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    reg = _registry()
-    return {n: reg.QUERIES[n] for n in _ordered_names(reg)}
+    return dict(_registry().QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL for each query (omissions → rows-only check)."""
-    reg = _registry()
-    return {n: reg.ORACLE[n] for n in _ordered_names(reg) if n in reg.ORACLE}
+    return dict(_registry().ORACLE)

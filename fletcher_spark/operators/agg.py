@@ -177,7 +177,9 @@ def _sql_str(s: str) -> str:
 #: partition local limit, one pass — it also materializes the
 #: histogram cache for the >L fall-through and for prehist callers'
 #: other branches).  The distributed staged path stays the >L
-#: fallback, so scale behavior is unchanged.
+#: fallback, so scale behavior is unchanged.  Measured just under the
+#: gate (3M rows, 20 string keys, ``local[4]`` on 4 cores, median of 5
+#: alternating pairs): local 5.06 s, staged 16.77 s.
 LOCAL_HIST_LIMIT = 4_000_000
 
 
@@ -207,6 +209,7 @@ def _cuts_local(hist, keys: list, k: int):
     import math
 
     import numpy as np
+    import pyarrow.compute as pc
 
     tbl = hist.limit(LOCAL_HIST_LIMIT + 1).toArrow()
     nrows = tbl.num_rows
@@ -219,23 +222,22 @@ def _cuts_local(hist, keys: list, k: int):
     if np.isnan(v).any():
         return None
     c = tbl.column("c").to_numpy(zero_copy_only=False).astype(np.int64)
-    kraw = []
+    # keys factorized by Arrow's hash encoder: group order is irrelevant
+    # (the output is a set of rows), and np.unique's sort of a string
+    # object array costs seconds at millions of rows
+    kenc = []
     gid = np.zeros(nrows, dtype=np.int64)
     for kc in keys:
         col = tbl.column(kc)
         if col.null_count:  # the staged/lazy tiers own NULL keys
             return None
-        kv = col.to_numpy(zero_copy_only=False)
-        kraw.append(kv)
-        _, inv = np.unique(kv, return_inverse=True)
-        gid = gid * (int(inv.max()) + 1) + inv
+        enc = pc.dictionary_encode(col.combine_chunks())
+        kenc.append(enc)
+        gid = gid * len(enc.dictionary) + enc.indices.to_numpy().astype(np.int64)
     order = np.lexsort((v, gid))
     v, c, gid = v[order], c[order], gid[order]
     starts = np.concatenate(([0], np.flatnonzero(np.diff(gid)) + 1, [nrows]))
     from pyspark.sql import types as T
-
-    def _py(x):
-        return x.item() if hasattr(x, "item") else x
 
     out_rows = []
     for s, e in zip(starts[:-1], starts[1:]):
@@ -253,7 +255,7 @@ def _cuts_local(hist, keys: list, k: int):
                 return None
             cuts.append(float(v[s + idx]))
         src = int(order[s])  # original row index: key values for this group
-        out_rows.append(tuple(_py(kv[src]) for kv in kraw) + (cuts, n))
+        out_rows.append(tuple(enc[src].as_py() for enc in kenc) + (cuts, n))
     schema = T.StructType(
         [hist.schema[kc] for kc in keys]
         + [

@@ -86,12 +86,11 @@ def connected_components(
     src: str = "id1",
     dst: str = "id2",
     max_rounds: int = 15,
-    local_edge_limit: int = LOCAL_EDGE_LIMIT,
 ) -> DataFrame:
     """Label every vertex of the undirected edge list with the minimum
     vertex id reachable from it.
 
-    Small edge sets (≤ ``local_edge_limit``) are solved with
+    Small edge sets (≤ ``LOCAL_EDGE_LIMIT``) are solved with
     driver-side union-find — one collect of the (already pair-verified,
     corpus-decimated) edge list beats O(diameter) distributed jobs by
     ~10× wall; the threshold mirrors broadcast-join size gating.
@@ -117,8 +116,8 @@ def connected_components(
     # into the persist, once to read it back out).  Above the gate the
     # probe is an early-exiting CollectLimit (a bounded partial pass)
     # and the distributed path proceeds exactly as before.
-    tbl = e.limit(local_edge_limit + 1).toArrow()
-    if tbl.num_rows <= local_edge_limit:
+    tbl = e.limit(LOCAL_EDGE_LIMIT + 1).toArrow()
+    if tbl.num_rows <= LOCAL_EDGE_LIMIT:
         return _local_union_find(tbl, e.sparkSession, e.schema[0].dataType)
     e = e.persist()
     n_edges = e.count()  # also materializes the persist exactly once
@@ -245,9 +244,7 @@ def _local_kcore(tbl, spark, k: int, rounds: int, id_type) -> DataFrame:
     return spark.createDataFrame(pdf, schema)
 
 
-def kcore_peel(
-    e: DataFrame, k: int, rounds: int, local_edge_limit: int = LOCAL_EDGE_LIMIT
-) -> DataFrame:
+def kcore_peel(e: DataFrame, k: int, rounds: int) -> DataFrame:
     """k-core decomposition by iterative peeling: each round removes
     every surviving node whose current degree is below ``k``, then
     recomputes degrees on the induced subgraph (Montresor et al.'s
@@ -274,7 +271,7 @@ def kcore_peel(
     (2·rounds + 1 jobs instead of 3·rounds + 1) with identical output
     (set semantics: chained anti-joins ≡ anti-join of the union).
 
-    Small edge sets (≤ ``local_edge_limit``, the same 4M-edge /
+    Small edge sets (≤ ``LOCAL_EDGE_LIMIT``, the same 4M-edge /
     ~64 MB-of-int64-pairs gate as :func:`connected_components`) are
     peeled driver-locally instead (r14, guide §1.2/§5): the
     distributed rounds cost 2·rounds + 1 eager checkpoint jobs of
@@ -288,10 +285,10 @@ def kcore_peel(
     """
     if rounds < 1:
         raise ValueError(f"kcore_peel needs rounds >= 1, got {rounds}")
-    if local_edge_limit and local_edge_limit > 0:
-        tbl = e.select("u", "v").limit(local_edge_limit + 1).toArrow()
+    if LOCAL_EDGE_LIMIT > 0:
+        tbl = e.select("u", "v").limit(LOCAL_EDGE_LIMIT + 1).toArrow()
         if (
-            tbl.num_rows <= local_edge_limit
+            tbl.num_rows <= LOCAL_EDGE_LIMIT
             and not tbl.column(0).null_count
             and not tbl.column(1).null_count
         ):

@@ -180,35 +180,13 @@ def lloyd_round_frame(
     )
 
 
-def lloyd_centroids(
-    v: DataFrame, id_col: str, vec_col: str, k: int, iters: int
-) -> Centroids:
-    """Train and return the centroid MODEL itself (k×dim, driver-side)
-    after ``iters`` Lloyd rounds from the deterministic lowest-id init.
-
-    Same rounds as :func:`lloyd`, exposed separately for consumers that
-    need the codebook rather than an assignment — product quantization
-    trains one of these per subspace (queries/similarity.py:ann_pq_adc)
-    and folds all of them back into a single map-only encode.
-
-    r14: rounds are CHAINED through broadcast one-row frames
-    (:func:`lloyd_round_frame`), so the whole training is ONE driver
-    collect regardless of ``iters`` (was 1 init + 1 collect per round);
-    the collected model is k×dim metadata, never corpus data."""
-    cents_df = init_cents_frame(v, id_col, vec_col, k)
-    for _ in range(iters):
-        cents_df = lloyd_round_frame(v, vec_col, cents_df)
-    row = cents_df.collect()[0]["cents"]
-    return [(int(c["cid"]), [float(x) for x in c["cv"]]) for c in row]
-
-
 def lloyd_centroids_multi(
     v: DataFrame, id_col: str, vec_cols: list[str], k: int, iters: int
 ) -> dict[str, Centroids]:
     """Train one codebook per column in ``vec_cols`` — the product-
     quantization case (queries/similarity.py:ann_pq_adc trains m
-    subspace codebooks over the same row set) — in the SAME number of
-    Spark jobs as a single :func:`lloyd_centroids` call.
+    subspace codebooks over the same row set) — in a number of Spark
+    jobs that does not depend on m.
 
     Trained independently per column, the m subspaces cost m inits and
     m aggregation jobs per round, all driver-sequential (~15 small
@@ -227,7 +205,7 @@ def lloyd_centroids_multi(
     embedding in the PQ case).
 
     Deliberately NOT chained through broadcast frames the way
-    :func:`lloyd`/:func:`lloyd_centroids` are (r14): A/B'd at sf0.1
+    :func:`lloyd` is (r14): A/B'd at sf0.1
     (iters=1, m=4), the chained form regressed ann_pq_adc 0.89 → 1.10 s
     (6 → 7 jobs) — the init/re-pivot global aggregates plus the
     broadcast exchange cost more than the two driver collects they

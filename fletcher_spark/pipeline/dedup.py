@@ -228,15 +228,6 @@ def lsh_rpb_case_sql(n_expr: str) -> str:
     return f"(CASE {whens} ELSE {LSH_BAND_FLOOR[1]} END)"
 
 
-def _halves_cols(shingle: Column) -> tuple[Column, Column]:
-    """Two 56-bit integer hashes from one md5 of a shingle (codegen;
-    the md5 is CSE'd across the two conv calls inside a Project)."""
-    h = F.md5(shingle)
-    v1 = F.conv(F.substring(h, 1, 14), 16, 10).cast("long")
-    v2 = F.conv(F.substring(h, 15, 14), 16, 10).cast("long")
-    return v1, v2
-
-
 def minhash_signature_df(
     df: DataFrame, id_col: str = "doc_id", shingle_col: str = "shingles", n_hashes: int = 12
 ) -> DataFrame:

@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fletcher_spark.io import load_tables
-from fletcher_spark.queries.registry import INTRODUCED_ROUND, query
+from fletcher_spark.queries.registry import query
 
 
 @query(
@@ -380,18 +380,3 @@ def histogram_equidepth_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("o_totalprice"), 2).alias("hi"),
         )
     )
-
-
-for _n in (
-    "date_month_arith",
-    "corr_regression_stats",
-    "conditional_agg_filter",
-    "histogram_width_bucket",
-    "string_agg_collect",
-    "array_lambda_ops",
-    "null_safe_join",
-):
-    INTRODUCED_ROUND[_n] = 4
-
-INTRODUCED_ROUND["histogram_equidepth"] = 5
-INTRODUCED_ROUND["histogram_equidepth_cuts"] = 7

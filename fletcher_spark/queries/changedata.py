@@ -37,8 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fletcher_spark.io import load_tables
-from fletcher_spark.queries.registry import INTRODUCED_ROUND, query
-
+from fletcher_spark.queries.registry import query
 
 
 @query(
@@ -221,10 +220,6 @@ def events_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .applyInPandas(_ewma_group, "user_id long, n_events long, ewma_last double")
     )
-
-
-for _n in ("cdc_merge_upsert", "scd2_type_history", "events_ewma"):
-    INTRODUCED_ROUND[_n] = 5
 
 
 @query(
@@ -432,9 +427,6 @@ def mv_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-INTRODUCED_ROUND["mv_incremental_agg"] = 5
-
-
 @query(
     "temporal_state_join",
     oracle="""
@@ -504,9 +496,6 @@ def temporal_state_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-
-
-INTRODUCED_ROUND["temporal_state_join"] = 5
 
 
 def _rfm_segment():
@@ -661,7 +650,3 @@ def events_rfm_segments_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "user_id", "r_score", "f_score", "m_score", _rfm_segment().alias("segment")
     )
-
-
-INTRODUCED_ROUND["events_rfm_segments"] = 5
-INTRODUCED_ROUND["events_rfm_segments_cuts"] = 7

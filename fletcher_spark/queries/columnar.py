@@ -826,8 +826,3 @@ def setitem_set_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir)["documents"]
     out = C.set_where(d, "lang", F.col("n_chars") > 300, "REDACTED")
     return out.select("doc_id", "lang", "n_chars")
-
-
-from fletcher_spark.queries.registry import INTRODUCED_ROUND as _IR  # noqa: E402
-
-_IR["setitem_set_where"] = 7

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from fletcher_spark.io import load_tables, spread
 from fletcher_spark.operators import graph as G
 from fletcher_spark.pipeline import dedup as D
-from fletcher_spark.queries.registry import INTRODUCED_ROUND, query
+from fletcher_spark.queries.registry import query
 
 
 @query(
@@ -1318,8 +1318,3 @@ def dedup_substring_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     speed) and the token cut as nested list lambdas."""
     d = spread(load_tables(spark, sf_dir)["documents"])
     return D.substring_dedup(d, "doc_id", "text", _SUBSTR_K)
-
-
-INTRODUCED_ROUND["dedup_levenshtein_block"] = 5
-INTRODUCED_ROUND["dedup_prefix_filter_join"] = 5
-INTRODUCED_ROUND["dedup_substring_exact"] = 7

@@ -460,9 +460,3 @@ def events_ttl_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_tables(spark, sf_dir)["events"]
     return ttl_first_seen_batch(ev, "user_id", "ts_us", 21_600_000_000)
-
-
-from fletcher_spark.queries.registry import INTRODUCED_ROUND as _IR  # noqa: E402
-
-_IR["events_hourly_anomaly"] = 4
-_IR["events_ttl_first_seen"] = 7

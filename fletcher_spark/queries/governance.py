@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fletcher_spark.io import load_tables
-from fletcher_spark.queries.registry import INTRODUCED_ROUND, query
+from fletcher_spark.queries.registry import query
 
 #: Deployment salt — a plan literal here; production injects a secret.
 _SALT = "fletcher-spark-demo-salt"
@@ -101,7 +101,3 @@ def privacy_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_groups"),
         F.sum("grp").alias("n_rows"),
     )
-
-
-for _n in ("privacy_pseudonymize", "privacy_k_anonymity"):
-    INTRODUCED_ROUND[_n] = 5

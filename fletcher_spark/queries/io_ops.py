@@ -130,11 +130,6 @@ BENCH_EXCLUDE.update(
     }
 )
 
-from fletcher_spark.queries.registry import INTRODUCED_ROUND as _IR  # noqa: E402
-
-_IR["io_jsonl_roundtrip"] = 4
-_IR["io_csv_roundtrip"] = 4
-
 
 @query(
     "dataset_checksum",
@@ -244,9 +239,3 @@ def ctor_from_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the API (big data arrives via sources, not literals)."""
     seq = [(0, "alpha"), (1, "beta"), (2, "gamma"), (3, "delta"), (4, None)]
     return spark.createDataFrame(seq, "idx long, name string")
-
-
-_IR["dataset_checksum"] = 5
-_IR["io_orc_roundtrip"] = 7
-_IR["io_arrow_roundtrip"] = 7
-_IR["ctor_from_sequence"] = 7

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fletcher_spark.io import load_tables, spread
-from fletcher_spark.queries.registry import INTRODUCED_ROUND, query
+from fletcher_spark.queries.registry import query
 
 #: whitespace-tokenized text with the trailing-separator artifact removed
 #: (several corpus docs end in a space; trimming keeps both engines from
@@ -802,24 +802,3 @@ def tfidf_doc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= 3)
         .select("doc_id", "tok", "tf", "df", F.round("score", 6).alias("score"), "rk")
     )
-
-
-for _n in (
-    "winsorize_doc_lengths",
-    "hybrid_text_embed_filter",
-    "tfidf_doc_topk",
-    "bpe_pair_counts",
-    "sample_k_per_group",
-    "tokenize_vocab_apply",
-    "semdedup_centroid",
-    "filter_blocklist_stats",
-    "docs_global_shuffle",
-    "mix_temperature_sampling",
-    "text_boilerplate_ratio",
-    "dedup_prefix_hash",
-    "embed_norm_stats",
-    "embed_dim_stats",
-):
-    INTRODUCED_ROUND[_n] = 4
-
-INTRODUCED_ROUND["winsorize_by_source_cuts"] = 7

@@ -543,11 +543,3 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_tables(spark, sf_dir)["documents"]
     payloads = d.select("doc_id", F.encode("text", "UTF-8").alias("payload"))
     return MM.sample_frames(payloads, "doc_id", "payload", 256, 3)
-
-
-from fletcher_spark.queries.registry import INTRODUCED_ROUND as _IR  # noqa: E402
-
-_IR["mm_resize_stub"] = 7
-_IR["mm_decode_png_roundtrip"] = 7
-_IR["mm_audio_features_roundtrip"] = 7
-_IR["mm_decode_jpeg_roundtrip"] = 8

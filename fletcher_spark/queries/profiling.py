@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from fletcher_spark.io import load_tables
 from fletcher_spark.operators.profile import key_skew_report, profile
-from fletcher_spark.queries.registry import INTRODUCED_ROUND, query
+from fletcher_spark.queries.registry import query
 
 
 @query(
@@ -405,16 +405,6 @@ def events_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-for _n in (
-    "profile_documents",
-    "skew_report_lineitem",
-    "pagerank_nation_trade",
-    "labelprop_nation_communities",
-    "events_cooccurrence_lift",
-):
-    INTRODUCED_ROUND[_n] = 5
-
-
 @query(
     "mad_outlier_docs",
     oracle="""
@@ -566,10 +556,6 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("long").alias("n_transitions"),
         F.round(F.col("n") / F.col("tot"), 6).alias("prob"),
     )
-
-
-for _n in ("mad_outlier_docs", "corpus_drift_chi2", "events_transition_matrix"):
-    INTRODUCED_ROUND[_n] = 5
 
 
 @query(
@@ -785,11 +771,6 @@ def event_type_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-for _n in ("events_time_weighted_avg", "docid_gap_ranges", "event_type_islands"):
-    INTRODUCED_ROUND[_n] = 5
-INTRODUCED_ROUND["docid_gap_ranges_bucketed"] = 7
-
-
 @query(
     "fk_orphan_audit",
     oracle="""
@@ -914,10 +895,6 @@ def source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-for _n in ("fk_orphan_audit", "source_vocab_overlap"):
-    INTRODUCED_ROUND[_n] = 5
-
-
 @query(
     "cust_quartiles_keyed_lazy",
     oracle="""
@@ -993,6 +970,3 @@ def cust_quartiles_keyed_lazy(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-
-
-INTRODUCED_ROUND["cust_quartiles_keyed_lazy"] = 8

@@ -5,6 +5,10 @@ to the equivalent ANSI-SQL string DuckDB runs on the same parquet tables.
 Keeping both in one ``@query`` decorator keeps column aliases in sync —
 the driver's comparator hashes values after sorting columns *by name*,
 so a drifting alias is a correctness failure even when values match.
+``QUERIES`` and ``ORACLE`` keep registration order (the module order of
+``load_all``, then definition order within a module); that is the order
+``__spark_entry__`` exposes and ``tools/check_queries.py --window``
+slices.
 
 Determinism rules every query follows:
 
@@ -27,147 +31,6 @@ ORACLE: dict[str, str] = {}
 #: Names excluded from bench.py's headline loop (e.g. O(n²) verifiers
 #: that exist for correctness cross-checks, not as scale paths).
 BENCH_EXCLUDE: set[str] = set()
-#: Round a query was first registered in (default 2 — the round the
-#: registry reached full coverage).  Used by __spark_entry__ to order
-#: the driver's bounded correctness snapshot: among never-verified
-#: queries, the ones waiting longest go first.
-INTRODUCED_ROUND: dict[str, int] = {
-    "dedup_simhash128_pairs": 3,
-    "text_pii_redact": 3,
-    "contamination_ngram_overlap": 3,
-    "corpus_mix_plan": 3,
-    "events_funnel_conversion": 3,
-    "events_cohort_retention": 3,
-    "dedup_incremental_batch": 3,
-    "ann_ivf_int8_rescore": 3,
-    "text_chunk_windows": 3,
-    "text_unigram_logprob": 3,
-    "batch_by_length": 3,
-    "dedup_first_seen_batch": 4,
-    "io_shard_roundtrip": 4,
-    "io_compact_roundtrip": 4,
-    "ewma_segmented": 9,
-}
-
-#: MANUAL layer of change-rounds: the round a query's implementation
-#: last materially changed through a path the source-hash guard can't
-#: see — i.e. a rewrite of an *operator module* the query calls into
-#: that touches neither the query body nor its oracle (e.g. the r8
-#: ``_LEV_BLOCK_CAP`` default change lived in dedup operator
-#: constants).  Direct body/oracle rewrites are detected MECHANICALLY:
-#: ``tests/test_stamp_guard.py`` fails any commit whose query source
-#: drifts from ``tools/query_src_hashes.json``, and
-#: ``python tools/stamp_guard.py update`` records the change-round in
-#: that snapshot.  ``changed_rounds()`` below merges both layers;
-#: __spark_entry__ orders changed-since-stamp queries ahead of
-#: everything except never-verified ones, so a rewrite gets an
-#: official post-change stamp in the next window instead of waiting
-#: for the full rotation to come back around.
-CHANGED_ROUND: dict[str, int] = {
-    "range_join_follows": 8,  # (user_id, ts div 5min) binning rewrite
-    "dedup_levenshtein_block": 8,  # _LEV_BLOCK_CAP default 256 -> 64
-    # r10 asof_join struct-carry rewrite (operator module, invisible to
-    # the query-source hash guard): null-valued right rows now yield
-    # NULL instead of an older non-null value (test_asof_property.py)
-    "asof_join_last_click": 10,
-    "asof_join_tolerance": 10,
-    # r10 shared zip_with ngrams-builder rewrite (pipeline/textpipe.py)
-    # — consumers whose own source did not change (ADVICE r10: route
-    # every consumer of the rewritten builder through an oracle
-    # re-verification, not just the property test)
-    "text_ngrams_top": 10,
-    "contamination_ngram_overlap": 10,
-    # r11 array_mode_count typed-NULL accumulator (pipeline/textpipe.py
-    # — operator module, invisible to the query-source hash guard)
-    "text_repetition": 11,
-    # r13 session_agg start-as-min(ts) pushdown barrier
-    # (streaming/windows.py — operator module, invisible to the
-    # query-source hash guard): output values identical, but the plan
-    # shape changed and downstream start-predicates are now sound
-    "events_session_window": 13,
-    # r13 optimization round, operator-module rewrites invisible to the
-    # source-hash guard — output values identical in every case, plan/
-    # construction shape changed: the k-means centroid literal and the
-    # sign-LSH plane literal are now built as ONE parsed SQL expression
-    # (was a py4j call per element); graph.kcore_peel no
-    # longer checkpoints `survivors` (derived from n0 minus the peeled
-    # sets instead)
-    "ann_kmeans_train": 14,
-    "ann_pq_adc": 13,
-    "ann_ivf_probe": 13,
-    "ann_ivf_int8_rescore": 13,
-    "knn_graph_blocked": 14,
-    "graph_kcore_peel": 14,
-    # r13: _bm25_scores (shared helper, invisible to the hash guard)
-    # rewritten single-scan — tf per term as in-row array ops, df/n/
-    # avgdl one broadcast 1-row aggregate; same integers, same scores
-    "search_bm25_topk": 13,
-    "search_hybrid_rrf": 13,
-    # r13: the materialize=True cut-point paths (operators/agg.py
-    # _cuts_by_key — operator module, invisible to the hash guard)
-    # twice rewritten this round: first driver-staged stats/offsets
-    # literals, then the gated single-job LOCAL histogram path
-    # (numpy-vectorized, LOCAL_HIST_LIMIT-gated, exact same rank
-    # arithmetic — differential-pinned in tests/test_cuts_driver_stage)
-    "histogram_equidepth_cuts": 14,
-    "events_rfm_segments_cuts": 14,
-    "winsorize_by_source_cuts": 14,
-    "sketch_quantile_bound": 13,
-    # r13 wave 10: chatty expression builders rendered as parsed SQL
-    # text in OPERATOR modules (invisible to the hash guard) — values
-    # identical, pinned by tests/test_vector_sql_twins.py and per-query
-    # oracle re-checks: pipeline/dedup.py simhash_df / simhash_df_128 /
-    # minhash_signature_df selectExpr batches; operators/profile.py
-    # profile() agg+stack text
-    "dedup_simhash_pairs": 13,
-    "dedup_simhash128_pairs": 13,
-    "profile_documents": 14,
-    # r14 optimization round 2, operator-module rewrites invisible to
-    # the source-hash guard — output values identical in every case
-    # (oracle-verified at sf0.01/sf0.1 and sf1-ladder hash-matched),
-    # plan/construction shape changed:
-    # - graph.kcore_peel gained the gated driver-local numpy peel
-    #   (tests/test_sketches.py local-vs-distributed differential) and
-    #   kmeans.lloyd chains rounds through broadcast frames — their
-    #   r13 entries above are bumped to 14 in place
-    # - graph.connected_components releases the symmetrized edge cache
-    #   after convergence (unpersist only — recompute hint, not values)
-    "dedup_cc_clusters": 14,
-    # - profile() SQL-text identifier/literal escaping (hostile
-    #   names) — r13 entry above bumped to 14 in place
-    # - agg._cuts_local clamps the 2^53 rank-threshold corner to the
-    #   distributed fall-through; pipeline/similarity.expr_cached parse
-    #   memo on the plane folds — the cuts-family and knn entries above
-    #   are bumped to 14 in place
-    # r15: similarity.brute_force_topk builds its norms and cosine from
-    # the SQL-text folds (l2_norm_sql/dot_sql) now that the Column-API
-    # forms are gone — same optimized plan up to lambda variable names
-    "ann_cosine_topk": 15,
-}
-
-
-def changed_rounds() -> dict[str, int]:
-    """Merged change-rounds: hand-maintained ``CHANGED_ROUND`` plus the
-    mechanically-recorded rounds in ``tools/query_src_hashes.json``
-    (max wins when both name a query)."""
-    import json
-    import os
-
-    merged = dict(CHANGED_ROUND)
-    snap = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        "tools",
-        "query_src_hashes.json",
-    )
-    try:
-        with open(snap) as f:
-            recorded = json.load(f).get("changed_rounds", {})
-    except (OSError, ValueError):
-        recorded = {}
-    for name, rnd in recorded.items():
-        if isinstance(rnd, int):
-            merged[name] = max(merged.get(name, 0), rnd)
-    return merged
 
 
 def query(name: str, oracle: str | None = None):

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from fletcher_spark.io import load_tables
 from fletcher_spark.operators import relational as R
-from fletcher_spark.queries.registry import INTRODUCED_ROUND, query
+from fletcher_spark.queries.registry import query
 
 
 @query(
@@ -867,7 +867,3 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-
-
-for _n in ("window_moving_avg", "snapshot_diff", "join_salted_skew"):
-    INTRODUCED_ROUND[_n] = 5

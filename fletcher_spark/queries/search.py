@@ -14,7 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from fletcher_spark.io import load_tables, spread
-from fletcher_spark.queries.registry import INTRODUCED_ROUND, query
+from fletcher_spark.pipeline import similarity as SIM
+from fletcher_spark.queries.registry import query
 
 #: demo phrase + ranked query over the corpus vocabulary
 _PHRASE = ("hash", "join")
@@ -267,26 +268,19 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= _LEG_TOPK)
     )
 
-    v = load_tables(spark, sf_dir)["embeddings"].select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("ev")
-    )
-    qrow = v.orderBy("vec_id").limit(1).collect()[0]
-    qlit = F.lit([float(x) for x in qrow["ev"]])
-    dot = F.aggregate(
-        F.zip_with(F.col("ev"), qlit, lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm_v = F.sqrt(
-        F.aggregate(
-            F.zip_with(F.col("ev"), F.col("ev"), lambda a, b: a * b),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    qnorm = sum(float(x) * float(x) for x in qrow["ev"]) ** 0.5
+    v = load_tables(spark, sf_dir)["embeddings"]
+    q = [float(x) for x in v.orderBy("vec_id").limit(1).collect()[0]["embedding"]]
+    # q as one parsed literal (the centroid_literal_sql form), not a
+    # py4j call per element; |q| stays a Python ``** 0.5``, since
+    # Spark's sqrt may round the last bit differently
+    q_sql = "array({})".format(",".join(f"{x!r}D" for x in q))
+    qnorm = sum(x * x for x in q) ** 0.5
     cosine = v.select(
-        F.col("vec_id").alias("doc_id"), (dot / (norm_v * F.lit(qnorm))).alias("c")
+        F.col("vec_id").alias("doc_id"),
+        F.expr(
+            f"({SIM.dot_sql('embedding', q_sql)})"
+            f" / (({SIM.l2_norm_sql('embedding')}) * {qnorm!r}D)"
+        ).alias("c"),
     )
     wv = Window.orderBy(F.col("c").desc(), F.col("doc_id").asc())
     rv = (
@@ -308,7 +302,3 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(10)
         .select("doc_id", F.round("rrf_raw", 6).alias("rrf"))
     )
-
-
-for _n in ("search_phrase_positional", "search_bm25_topk", "search_hybrid_rrf"):
-    INTRODUCED_ROUND[_n] = 5

@@ -939,7 +939,6 @@ def knn_graph_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     return edges.select("vec_id", "nbr_id", F.round("cos", 4).alias("cos"), "rk")
 
 
-
 # -- Product quantization (ADC) -------------------------------------------
 
 _PQ_M, _PQ_SUB, _PQ_K = 4, 16, 4
@@ -1020,8 +1019,8 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization with asymmetric distance (the FAISS PQ/ADC
     shape): split the 64-dim space into 4 subspaces of 16 dims, train a
     4-centroid codebook per subspace (1 Lloyd round, deterministic
-    lowest-id init — operators/kmeans.py:lloyd_centroids), encode every
-    vector as 4 small codes, and rank the corpus against a query vector
+    lowest-id init — operators/kmeans.py:lloyd_centroids_multi), encode
+    every vector as 4 small codes, and rank the corpus against a query vector
     by summing PRECOMPUTED query-to-centroid distances per subspace.
 
     Scale shape: codebooks are model state (m·k·sub = 256 doubles) pinned
@@ -1092,8 +1091,3 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("code"),
         )
     )
-
-from fletcher_spark.queries.registry import INTRODUCED_ROUND as _IR  # noqa: E402
-
-_IR["knn_graph_blocked"] = 4
-_IR["ann_pq_adc"] = 5

@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 
 from fletcher_spark.io import load_tables
 from fletcher_spark.operators import sketch as SK
-from fletcher_spark.queries.registry import INTRODUCED_ROUND, query
+from fletcher_spark.queries.registry import query
 
 _CMS_DEPTH = 4
 _CMS_WIDTH = 256
@@ -594,16 +594,6 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("n_name").alias("nation"), "removed_round", "core_deg")
 
 
-for _n in (
-    "sketch_cms_heavyhitters",
-    "sketch_bloom_membership",
-    "graph_triangle_count",
-    "sketch_kmv_distinct",
-    "graph_kcore_peel",
-):
-    INTRODUCED_ROUND[_n] = 6
-
-
 @query(
     "sketch_quantile_bound",
     oracle="""
@@ -708,6 +698,3 @@ def sketch_quantile_bound(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("z.v"), 2).alias("exact_disc"),
     )
     return ex.join(checks, "p").select("p", "exact_disc", "within_bound")
-
-
-INTRODUCED_ROUND["sketch_quantile_bound"] = 7

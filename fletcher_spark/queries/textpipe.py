@@ -974,8 +974,3 @@ def sample_weighted_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(50)
         .select("doc_id", "n_chars")
     )
-
-
-from fletcher_spark.queries.registry import INTRODUCED_ROUND as _IR  # noqa: E402
-
-_IR["sample_weighted_aes"] = 5

@@ -115,22 +115,29 @@ def test_local_fast_path_equals_forced_staged(spark, name, vals, monkeypatch):
 
 
 def test_local_fast_path_keyed_equals_forced_staged(spark, monkeypatch):
+    """Keyed local path vs the staged tier (one string key) and vs the
+    lazy plan (several keys of mixed types): the local path factorizes
+    every key type through Arrow's dictionary encoding."""
+    import datetime
+
     from fletcher_spark.operators import agg as A
 
-    rows = [(f"s{i % 3}", float(i) * 1.25 - 7) for i in range(91)]
-    df = spark.createDataFrame(rows, "source string, x double")
-    local = _canon(
-        exact_cut_points_by_key(
-            df, ["source"], "x", 4, n_coarse=8, materialize=True
-        ).collect()
-    )
-    monkeypatch.setattr(A, "LOCAL_HIST_LIMIT", 0)
-    staged = _canon(
-        exact_cut_points_by_key(
-            df, ["source"], "x", 4, n_coarse=8, materialize=True
-        ).collect()
-    )
-    assert local == staged
+    rows = [
+        (f"s{i % 3}", i % 2, datetime.date(2020, 1, 1 + i % 4), float(i) * 1.25 - 7)
+        for i in range(91)
+    ]
+    df = spark.createDataFrame(rows, "source string, g int, day date, x double")
+    for keys, groups in ((["source"], 3), (["source", "g", "day"], 12)):
+        local = _canon(
+            exact_cut_points_by_key(df, keys, "x", 4, n_coarse=8, materialize=True).collect()
+        )
+        with monkeypatch.context() as m:
+            m.setattr(A, "LOCAL_HIST_LIMIT", 0)
+            staged = _canon(
+                exact_cut_points_by_key(df, keys, "x", 4, n_coarse=8, materialize=True).collect()
+            )
+        assert len(local) == groups
+        assert local == staged
 
 
 def test_nan_values_fall_through_local_path(spark):

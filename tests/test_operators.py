@@ -312,13 +312,13 @@ def test_salted_aggregation_matches_direct(spark):
 
 
 @pytest.mark.parametrize("limit", [4_000_000, 0], ids=["local-uf", "distributed"])
-def test_connected_components_topologies(spark, limit):
+def test_connected_components_topologies(spark, monkeypatch, limit):
     """Chain, star, and singleton-pair components all collapse to the
     min id — the case the corpus oracle can't exercise (its planted
     near-dups are all size-2 pairs).  Both execution paths (driver
     union-find under the size gate; iterative hash-min above it) must
     agree exactly."""
-    from fletcher_spark.operators.graph import connected_components
+    from fletcher_spark.operators import graph as G
 
     edges = spark.createDataFrame(
         [
@@ -328,10 +328,8 @@ def test_connected_components_topologies(spark, limit):
         ],
         "id1 long, id2 long",
     )
-    got = {
-        r["id"]: r["label"]
-        for r in connected_components(edges, local_edge_limit=limit).collect()
-    }
+    monkeypatch.setattr(G, "LOCAL_EDGE_LIMIT", limit)
+    got = {r["id"]: r["label"] for r in G.connected_components(edges).collect()}
     assert got == {
         10: 10, 20: 10, 30: 10, 40: 10,
         100: 100, 101: 100, 102: 100, 103: 100,
@@ -340,24 +338,22 @@ def test_connected_components_topologies(spark, limit):
 
 
 @pytest.mark.parametrize("limit", [4_000_000, 0], ids=["local-uf", "distributed"])
-def test_connected_components_merge_two_chains(spark, limit):
+def test_connected_components_merge_two_chains(spark, monkeypatch, limit):
     """Two chains bridged by one edge merge into a single component
     (requires >1 propagation round: min must travel the bridge)."""
-    from fletcher_spark.operators.graph import connected_components
+    from fletcher_spark.operators import graph as G
 
     edges = spark.createDataFrame(
         [(1, 5), (5, 9), (20, 24), (24, 28), (9, 20)],
         "id1 long, id2 long",
     )
-    got = {
-        r["id"]: r["label"]
-        for r in connected_components(edges, local_edge_limit=limit).collect()
-    }
+    monkeypatch.setattr(G, "LOCAL_EDGE_LIMIT", limit)
+    got = {r["id"]: r["label"] for r in G.connected_components(edges).collect()}
     assert set(got.values()) == {1}
     assert set(got) == {1, 5, 9, 20, 24, 28}
 
 
-def test_connected_components_long_chain_distributed(spark):
+def test_connected_components_long_chain_distributed(spark, monkeypatch):
     """A 30-vertex chain with the local gate forced off: the min label
     must travel the full diameter, crossing the localCheckpoint lineage
     cut every 5 rounds (operators/graph.py).  Plain hash-min moves the
@@ -365,36 +361,32 @@ def test_connected_components_long_chain_distributed(spark):
     the pointer-jump step (label ← label[label]) makes rounds
     O(log diameter), so 30 vertices converge well inside
     max_rounds=15."""
-    from fletcher_spark.operators.graph import connected_components
+    from fletcher_spark.operators import graph as G
 
     n = 30
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, n)], "id1 long, id2 long"
     )
-    got = {
-        r["id"]: r["label"]
-        for r in connected_components(edges, local_edge_limit=0).collect()
-    }
+    monkeypatch.setattr(G, "LOCAL_EDGE_LIMIT", 0)
+    got = {r["id"]: r["label"] for r in G.connected_components(edges).collect()}
     assert got == {i: 1 for i in range(1, n + 1)}
 
 
 @pytest.mark.parametrize("limit", [4_000_000, 0], ids=["local-uf", "distributed"])
-def test_connected_components_null_edges_dropped(spark, limit):
+def test_connected_components_null_edges_dropped(spark, monkeypatch, limit):
     """Null endpoints are filtered before branching, so both paths agree
     on malformed input instead of diverging (ADVICE r2)."""
-    from fletcher_spark.operators.graph import connected_components
+    from fletcher_spark.operators import graph as G
 
     edges = spark.createDataFrame(
         [(1, 2), (None, 3), (4, None), (2, 5)], "id1 long, id2 long"
     )
-    got = {
-        r["id"]: r["label"]
-        for r in connected_components(edges, local_edge_limit=limit).collect()
-    }
+    monkeypatch.setattr(G, "LOCAL_EDGE_LIMIT", limit)
+    got = {r["id"]: r["label"] for r in G.connected_components(edges).collect()}
     assert got == {1: 1, 2: 1, 5: 1}
 
 
-def test_connected_components_random_graph_paths_agree(spark):
+def test_connected_components_random_graph_paths_agree(spark, monkeypatch):
     """Randomized differential check: on a 2000-edge random graph with
     many components, chains, and cycles, the distributed pointer-jump
     path must produce EXACTLY the labels the driver union-find does —
@@ -403,39 +395,33 @@ def test_connected_components_random_graph_paths_agree(spark):
     can't cover."""
     import random
 
-    from fletcher_spark.operators.graph import connected_components
+    from fletcher_spark.operators import graph as G
 
     rng = random.Random(20260813)
     edges = [
         (rng.randrange(1500), rng.randrange(1500)) for _ in range(2000)
     ]
     df = spark.createDataFrame(edges, "id1 long, id2 long")
-    local = {
-        r["id"]: r["label"]
-        for r in connected_components(df, local_edge_limit=10**9).collect()
-    }
-    dist = {
-        r["id"]: r["label"]
-        for r in connected_components(df, local_edge_limit=0).collect()
-    }
+    monkeypatch.setattr(G, "LOCAL_EDGE_LIMIT", 10**9)
+    local = {r["id"]: r["label"] for r in G.connected_components(df).collect()}
+    monkeypatch.setattr(G, "LOCAL_EDGE_LIMIT", 0)
+    dist = {r["id"]: r["label"] for r in G.connected_components(df).collect()}
     assert local == dist
     assert len(local) > 100
 
 
 @pytest.mark.parametrize("limit", [4_000_000, 0], ids=["local-uf", "distributed"])
-def test_connected_components_string_ids(spark, limit):
+def test_connected_components_string_ids(spark, monkeypatch, limit):
     """String vertex ids (document fingerprints) work on both paths —
     the Arrow/numpy union-find factorizes ids, it does not assume
     int64."""
-    from fletcher_spark.operators.graph import connected_components
+    from fletcher_spark.operators import graph as G
 
     edges = spark.createDataFrame(
         [("b", "c"), ("a", "b"), ("x", "y")], "id1 string, id2 string"
     )
-    got = {
-        r["id"]: r["label"]
-        for r in connected_components(edges, local_edge_limit=limit).collect()
-    }
+    monkeypatch.setattr(G, "LOCAL_EDGE_LIMIT", limit)
+    got = {r["id"]: r["label"] for r in G.connected_components(edges).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 

@@ -37,3 +37,12 @@ def test_every_query_has_oracle_or_is_flagged():
         assert name.startswith(allowed_prefixes), (
             f"{name} lacks oracle SQL but is not a documented non-SQL-expressible op"
         )
+
+
+def test_entry_exposes_registry_in_registration_order():
+    """``queries()`` and ``oracle_sql()`` mirror the registry, in order."""
+    import __spark_entry__ as e
+
+    assert list(e.queries()) == list(registry.QUERIES)
+    assert e.oracle_sql() == registry.ORACLE
+    assert list(e.oracle_sql()) == list(registry.ORACLE)

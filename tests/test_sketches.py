@@ -184,14 +184,14 @@ def test_kcore_peel_triangle_with_tail_converges(spark):
         assert got[n] == (0, 2), got
 
 
-def test_kcore_local_vs_distributed_differential(spark):
+def test_kcore_local_vs_distributed_differential(spark, monkeypatch):
     """The r14 driver-local peel must be value-identical to the
     distributed rounds on graphs exercising every branch: cascades,
     exact cores, isolated-by-peeling nodes, multi-edges, self-loops at
     both parities of k."""
     import random
 
-    from fletcher_spark.operators.graph import kcore_peel
+    from fletcher_spark.operators import graph as G
 
     rng = random.Random(1414)
     cases = [
@@ -213,10 +213,12 @@ def test_kcore_local_vs_distributed_differential(spark):
             e = spark.createDataFrame(edges, "u long, v long")
             loc = {
                 r["node"]: (r["removed_round"], r["core_deg"])
-                for r in kcore_peel(e, k, 3).collect()
+                for r in G.kcore_peel(e, k, 3).collect()
             }
-            dist = {
-                r["node"]: (r["removed_round"], r["core_deg"])
-                for r in kcore_peel(e, k, 3, local_edge_limit=0).collect()
-            }
+            with monkeypatch.context() as m:
+                m.setattr(G, "LOCAL_EDGE_LIMIT", 0)
+                dist = {
+                    r["node"]: (r["removed_round"], r["core_deg"])
+                    for r in G.kcore_peel(e, k, 3).collect()
+                }
             assert loc == dist, (k, edges)

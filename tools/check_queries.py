@@ -12,7 +12,9 @@ Usage:
   python tools/check_queries.py [--sf DIR] --window N OFFSET  queries()[OFFSET:OFFSET+N]
   python tools/check_queries.py [--sf DIR] <query> [...]      the named queries
 
-``--sf`` defaults to sf0.01, the scale the contract is scored at.
+``queries()`` is in registration order, so a window is the same slice
+on every run.  ``--sf`` defaults to sf0.01, the scale the contract is
+scored at.
 """
 import argparse
 import os
